@@ -6,7 +6,7 @@ from __future__ import annotations
 import pandas as pd
 
 import datalog_oracle as oracle
-from zelph_spark import extract, rules as Rz
+from zelph_spark import closure, extract, rules as Rz
 from zelph_spark.reasoning import run_fixpoint
 from zelph_spark.reasoning.fused import fuse_rules
 
@@ -25,7 +25,7 @@ def test_fuse_classification():
     assert "transitive-inverse" in fused_ids
 
 
-def test_fused_equals_unfused_on_fixture(spark, fixture_docs_df):
+def test_fused_equals_unfused_on_fixture(spark, fixture_docs_df, monkeypatch):
     t = extract.triples(extract.extract_all(fixture_docs_df))
     base = spark.createDataFrame(
         pd.DataFrame(
@@ -36,6 +36,8 @@ def test_fused_equals_unfused_on_fixture(spark, fixture_docs_df):
             columns=["subj", "pred", "obj"],
         )
     )
+    # fuse shapes the distributed loop only: pin it
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)
     fused = run_fixpoint(base, Rz.wikidata_rules(), fuse=True)
     plain = run_fixpoint(base, Rz.wikidata_rules(), fuse=False)
     fset = {(r.subj, r.pred, r.obj) for r in fused.edges.collect()}
@@ -48,7 +50,7 @@ def test_fused_equals_unfused_on_fixture(spark, fixture_docs_df):
     assert fset == want
 
 
-def test_fused_with_constant_consequence_and_filters(spark):
+def test_fused_with_constant_consequence_and_filters(spark, monkeypatch):
     """Rules with constant subjects/objects in conditions and constants in
     the consequence go through the fused path correctly."""
     from zelph_spark.rules import P, R
@@ -65,6 +67,7 @@ def test_fused_with_constant_consequence_and_filters(spark):
     df = spark.createDataFrame(
         pd.DataFrame(facts, columns=["subj", "pred", "obj"])
     )
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)  # the fused path
     res = run_fixpoint(df, rules, fuse=True)
     got = {(r.subj, r.pred, r.obj) for r in res.edges.collect()}
     want = oracle.stratified_fixpoint(set(facts), rules)

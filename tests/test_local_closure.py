@@ -168,3 +168,18 @@ def test_kernel_deep_chain_and_cycle_selfpairs():
     assert set(zip(s.tolist(), o.tolist())) == {
         (i, j) for i in range(3) for j in range(3)
     }
+
+
+def test_distributed_hop_caps_raise(spark, monkeypatch):
+    """The distributed loops fail loudly at their cap instead of returning
+    a truncated answer."""
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)
+    chain = _pairs(spark, [(i, i + 1) for i in range(12)])
+    seeds = spark.createDataFrame(pd.DataFrame({"node": [0]}))
+    with pytest.raises(RuntimeError, match=r"transitive_targets.*max_iter=4\b"):
+        closure.transitive_targets(chain, seeds, max_iter=4)
+    with pytest.raises(RuntimeError, match=r"transitive_closure.*max_iter=4\b"):
+        closure.transitive_closure(chain, method="linear", max_iter=4)
+    # a cap that suffices still answers in full
+    got = closure.transitive_targets(chain, seeds, max_iter=20)
+    assert {r.node for r in got.collect()} == set(range(1, 13))

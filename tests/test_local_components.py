@@ -54,3 +54,11 @@ def test_string_ids_match(spark, monkeypatch):
     assert local == dist == {
         ("zz", "aa"), ("m", "aa"), ("aa", "aa"), ("q", "q"), ("q2", "q"),
     }
+
+
+def test_distributed_round_cap_raises(spark, monkeypatch):
+    """Min-label propagation still changing labels at ``max_iter`` raises
+    instead of returning partial components."""
+    monkeypatch.setattr(canon, "LOCAL_CC_BOUND", 0)
+    with pytest.raises(RuntimeError, match=r"connected_components.*max_iter=1\b"):
+        canon.connected_components(_pairs(spark, GRAPHS["chain"]), max_iter=1)

@@ -153,3 +153,29 @@ def test_pipeline_resume_skips_completed_stages(spark, fixture_docs_df, tmp_path
     assert s1 == s2
     man = store.manifest("saturated")
     assert man["rows"] == len(s2)
+
+
+def test_pipeline_fixpoint_plans_agree(spark, tmp_path, monkeypatch):
+    """run_pipeline with the single-task fixpoint kernel and with the
+    distributed loop (edge bound 0): identical saturated rows, deduced count
+    and contradiction count."""
+    from zelph_spark import closure
+
+    docs = datagen.synthetic_corpus(spark, n_docs=12, seed=5).localCheckpoint()
+    got = {}
+    for plan, bound in (("kernel", closure.LOCAL_EDGE_BOUND), ("distributed", 0)):
+        monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", bound)
+        res = run_pipeline(spark, docs, str(tmp_path / plan))
+        first = res.counters["fixpoint_log"][0]
+        assert first.get("plan", first.get("reason")) == (
+            "kernel" if plan == "kernel" else "bound"
+        )
+        sat = res.saturated_ids
+        digest = sat.select(
+            F.count(F.lit(1)), F.sum(F.xxhash64(*sat.columns) % 2147483647)
+        ).first()
+        got[plan] = (
+            tuple(digest), res.counters["deduced"], res.contradictions.count()
+        )
+    assert got["kernel"] == got["distributed"]
+    assert got["kernel"][1] > 0

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import datalog_oracle as oracle
-from zelph_spark import datagen, extract, rules as Rz
+from zelph_spark import closure, datagen, extract, rules as Rz
 from zelph_spark.reasoning import (
     evaluate_query,
     run_fixpoint,
@@ -30,6 +30,18 @@ def _edge_set(df):
     return {(r.subj, r.pred, r.obj) for r in df.collect()}
 
 
+def _plans(monkeypatch):
+    """Both fixpoint plans in turn: the single-task kernel (default edge
+    bound) and the distributed loop (bound 0). Yields the plan name."""
+    for plan, bound in (("kernel", closure.LOCAL_EDGE_BOUND), ("distributed", 0)):
+        monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", bound)
+        yield plan
+
+
+def _plan_of(res):
+    return res.log[0].get("plan", "distributed")
+
+
 # ---------------------------------------------------------------------------
 # Full wikidata.zph ruleset on the fixture corpus, vs the oracle
 # ---------------------------------------------------------------------------
@@ -43,54 +55,69 @@ def fixture_facts(spark, fixture_docs_df):
     return facts
 
 
-def test_wikidata_ruleset_matches_oracle(spark, fixture_facts):
+def test_wikidata_ruleset_matches_oracle(spark, fixture_facts, monkeypatch):
     want = oracle.stratified_fixpoint(fixture_facts, Rz.wikidata_rules())
-    edges = _df(spark, sorted(fixture_facts))
-    res = run_fixpoint(
-        edges,
-        Rz.wikidata_rules(),
-        contradiction_rules=Rz.wikidata_contradiction_rules(),
-    )
-    got = _edge_set(res.edges)
-    assert got == want
-    assert res.n_deduced == len(want) - len(fixture_facts)
-    # differential safety net (reasoning_seminaive.cpp:386-407)
-    assert verify_fixpoint(res, Rz.wikidata_rules())
-    # contradictions vs oracle
     want_c = oracle.contradiction_bindings(
         want, Rz.wikidata_contradiction_rules()
     )
-    got_c = {
-        (r.rule_id, frozenset(r.bindings.items()))
-        for r in res.contradictions.collect()
-    }
-    assert got_c == want_c
-    # the seeded contradictions actually fire
-    fired = {r.rule_id for r in res.contradictions.collect()}
-    assert "c-isa-cycle" in fired  # Q501/Q502
-    assert "c-isa-and-sub" in fired  # Q503
-    assert "c-opp-quality" in fired  # Q203 hot+cold
-
-
-def test_expected_signature_deductions(spark, fixture_facts):
-    res = run_fixpoint(_df(spark, sorted(fixture_facts)), Rz.wikidata_rules())
-    got = _edge_set(res.edges)
-    assert ("Q100", "P31", "Q215627") in got  # subclass lift
-    assert ("Q100", "P31", "Q35120") in got  # + transitive P279
-    assert ("Q213", "P527", "Q212") in got  # transitive has-part (3 hops)
-    assert ("Q202", "P461", "Q201") in got  # symmetry
-    assert ("Q211", "P361", "Q210") in got  # inverse swap P527 -> P361
-    assert ("Q401", "P31", "Q35120") in got  # facet isa
-    assert ("Q401", "P527", "Q403") in got  # facet has-part
-    assert ("P361", "P1696", "P527") in got and ("P527", "P1696", "P361") in got
-
-
-def test_naive_equals_seminaive(spark, fixture_facts):
-    """Differential equivalence, test_seminaive.cpp:71."""
     edges = _df(spark, sorted(fixture_facts))
-    a = run_fixpoint(edges, Rz.wikidata_rules(), semi_naive=True)
+    for plan in _plans(monkeypatch):
+        res = run_fixpoint(
+            edges,
+            Rz.wikidata_rules(),
+            contradiction_rules=Rz.wikidata_contradiction_rules(),
+        )
+        assert _plan_of(res) == plan
+        got = _edge_set(res.edges)
+        assert got == want, plan
+        assert res.n_deduced == len(want) - len(fixture_facts), plan
+        assert _edge_set(res.deduced) == want - fixture_facts, plan
+        # differential safety net (reasoning_seminaive.cpp:386-407)
+        assert verify_fixpoint(res, Rz.wikidata_rules()), plan
+        # contradictions vs oracle
+        got_c = {
+            (r.rule_id, frozenset(r.bindings.items()))
+            for r in res.contradictions.collect()
+        }
+        assert got_c == want_c, plan
+        # the seeded contradictions actually fire
+        fired = {rule_id for rule_id, _ in got_c}
+        assert "c-isa-cycle" in fired  # Q501/Q502
+        assert "c-isa-and-sub" in fired  # Q503
+        assert "c-opp-quality" in fired  # Q203 hot+cold
+
+
+def test_expected_signature_deductions(spark, fixture_facts, monkeypatch):
+    for plan in _plans(monkeypatch):
+        res = run_fixpoint(
+            _df(spark, sorted(fixture_facts)), Rz.wikidata_rules()
+        )
+        assert _plan_of(res) == plan
+        got = _edge_set(res.edges)
+        assert ("Q100", "P31", "Q215627") in got  # subclass lift
+        assert ("Q100", "P31", "Q35120") in got  # + transitive P279
+        assert ("Q213", "P527", "Q212") in got  # transitive has-part (3 hops)
+        assert ("Q202", "P461", "Q201") in got  # symmetry
+        assert ("Q211", "P361", "Q210") in got  # inverse swap P527 -> P361
+        assert ("Q401", "P31", "Q35120") in got  # facet isa
+        assert ("Q401", "P527", "Q403") in got  # facet has-part
+        assert ("P361", "P1696", "P527") in got
+        assert ("P527", "P1696", "P361") in got
+
+
+def test_naive_equals_seminaive(spark, fixture_facts, monkeypatch):
+    """Differential equivalence, test_seminaive.cpp:71: the kernel, the
+    distributed semi-naive loop and the distributed naive loop agree with
+    each other and with the oracle."""
+    edges = _df(spark, sorted(fixture_facts))
+    want = oracle.stratified_fixpoint(fixture_facts, Rz.wikidata_rules())
+    for plan in _plans(monkeypatch):
+        a = run_fixpoint(edges, Rz.wikidata_rules(), semi_naive=True)
+        assert _plan_of(a) == plan
+        assert _edge_set(a.edges) == want, plan
+        assert verify_fixpoint(a, Rz.wikidata_rules()), plan
     b = run_fixpoint(edges, Rz.wikidata_rules(), semi_naive=False)
-    assert _edge_set(a.edges) == _edge_set(b.edges)
+    assert _edge_set(b.edges) == want
 
 
 # ---------------------------------------------------------------------------
@@ -98,7 +125,7 @@ def test_naive_equals_seminaive(spark, fixture_facts):
 # ---------------------------------------------------------------------------
 
 
-def test_transitive_cycle_terminates(spark):
+def test_transitive_cycle_terminates(spark, monkeypatch):
     """Chain with a cycle: closure computed, loop terminates
     (test_reasoning.cpp:349)."""
     facts = [
@@ -107,6 +134,7 @@ def test_transitive_cycle_terminates(spark):
         ("b", "p", "c"),
         ("c", "p", "a"),
     ]
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)  # pins the loop
     res = run_fixpoint(_df(spark, facts), Rz.wikidata_rules())
     got = _edge_set(res.edges)
     for x in "abc":
@@ -115,7 +143,7 @@ def test_transitive_cycle_terminates(spark):
     assert res.iterations < 10
 
 
-def test_naf_fires_only_after_saturation(spark):
+def test_naf_fires_only_after_saturation(spark, monkeypatch):
     """Stratified NAF (test_stratified.cpp:48-95): 'base' reaches 'd' only
     transitively; the NAF rule must not fire on the pre-closure state."""
     facts = [
@@ -133,21 +161,24 @@ def test_naf_fires_only_after_saturation(spark):
         negated=(1,),
     )
     rules = Rz.wikidata_rules() + [naf_rule]
-    res = run_fixpoint(_df(spark, facts), rules)
-    got = _edge_set(res.edges)
-    # closure gives (a p d); x is not reachable -> flagged
-    assert ("a", "p", "d") in got
-    assert ("x", "flag", "isolated") in got
-    # counter-case: if x were reachable, no flag
-    facts2 = facts + [("a", "p", "x")]
-    res2 = run_fixpoint(_df(spark, facts2), rules)
-    assert ("x", "flag", "isolated") not in _edge_set(res2.edges)
-    # oracle agreement on the NAF program
     want = oracle.stratified_fixpoint(set(facts), rules)
-    assert got == want
+    facts2 = facts + [("a", "p", "x")]
+    for plan in _plans(monkeypatch):
+        res = run_fixpoint(_df(spark, facts), rules)
+        assert _plan_of(res) == plan
+        got = _edge_set(res.edges)
+        # closure gives (a p d); x is not reachable -> flagged
+        assert ("a", "p", "d") in got
+        assert ("x", "flag", "isolated") in got
+        # counter-case: if x were reachable, no flag
+        res2 = run_fixpoint(_df(spark, facts2), rules)
+        assert ("x", "flag", "isolated") not in _edge_set(res2.edges)
+        # oracle agreement on the NAF program
+        assert got == want, plan
+        assert verify_fixpoint(res, rules), plan
 
 
-def test_rule_order_independence(spark):
+def test_rule_order_independence(spark, monkeypatch):
     """Stratification is schedule-independent (test_stratified.cpp:48-336)."""
     facts = [("a", "r", "b")]
     r1 = R("pos", [P("?X", "r", "?Y")], P("?Y", "s", "?X"))
@@ -157,14 +188,16 @@ def test_rule_order_independence(spark):
         P("?X", "t", "?Y"),
         negated=(1,),
     )
-    fwd = run_fixpoint(_df(spark, facts), [r1, r2])
-    rev = run_fixpoint(_df(spark, facts), [r2, r1])
-    assert _edge_set(fwd.edges) == _edge_set(rev.edges)
-    # (b s a) exists, so the NAF rule must never fire
-    assert ("a", "t", "b") not in _edge_set(fwd.edges)
+    want = oracle.stratified_fixpoint(set(facts), [r1, r2])
+    for plan in _plans(monkeypatch):
+        fwd = run_fixpoint(_df(spark, facts), [r1, r2])
+        rev = run_fixpoint(_df(spark, facts), [r2, r1])
+        assert _edge_set(fwd.edges) == _edge_set(rev.edges) == want, plan
+        # (b s a) exists, so the NAF rule must never fire
+        assert ("a", "t", "b") not in _edge_set(fwd.edges)
 
 
-def test_naf_deduction_reopens_positive_stratum(spark):
+def test_naf_deduction_reopens_positive_stratum(spark, monkeypatch):
     """Deferred consequences re-open the positive stratum
     (test_stratified.cpp:150)."""
     facts = [("a", "r", "b")]
@@ -173,20 +206,22 @@ def test_naf_deduction_reopens_positive_stratum(spark):
         P("?X", "s", "?Y"), negated=(1,),
     )
     pos = R("chain", [P("?X", "s", "?Y")], P("?X", "done", "?Y"))
-    res = run_fixpoint(_df(spark, facts), [naf, pos])
-    got = _edge_set(res.edges)
-    assert ("a", "s", "b") in got and ("a", "done", "b") in got
     want = oracle.stratified_fixpoint(set(facts), [naf, pos])
-    assert got == want
-    # the re-opened stratum must not duplicate rows or double-count: edges
-    # stays a set and n_deduced is exact (regression: NAF delta was unioned
-    # into full twice)
-    assert res.edges.count() == len(got)
-    assert res.deduced.count() == len(got) - len(facts)
-    assert res.n_deduced == len(got) - len(facts)
+    for plan in _plans(monkeypatch):
+        res = run_fixpoint(_df(spark, facts), [naf, pos])
+        assert _plan_of(res) == plan
+        got = _edge_set(res.edges)
+        assert ("a", "s", "b") in got and ("a", "done", "b") in got
+        assert got == want, plan
+        # the re-opened stratum must not duplicate rows or double-count:
+        # edges stays a set and n_deduced is exact (regression: NAF delta
+        # was unioned into full twice)
+        assert res.edges.count() == len(got)
+        assert res.deduced.count() == len(got) - len(facts)
+        assert res.n_deduced == len(got) - len(facts)
 
 
-def test_unequal_guard(spark):
+def test_unequal_guard(spark, monkeypatch):
     """!= guard blocks same-value bindings (test_reasoning.cpp:387,551)."""
     facts = [("a", "r", "b"), ("b", "r", "b")]
     rule = R(
@@ -195,9 +230,10 @@ def test_unequal_guard(spark):
         P("?X", "ne", "?Y"),
         unequals=(("?X", "?Y"),),
     )
-    got = _edge_set(run_fixpoint(_df(spark, facts), [rule]).edges)
-    assert ("a", "ne", "b") in got
-    assert ("b", "ne", "b") not in got
+    for plan in _plans(monkeypatch):
+        got = _edge_set(run_fixpoint(_df(spark, facts), [rule]).edges)
+        assert ("a", "ne", "b") in got, plan
+        assert ("b", "ne", "b") not in got, plan
 
 
 def test_repeated_variable_in_pattern(spark):
@@ -246,7 +282,7 @@ def test_split_transitive_shapes():
     assert split_transitive([other, notrans]) is None
 
 
-def test_transitive_doubling_differential_deep_chain(spark):
+def test_transitive_doubling_differential_deep_chain(spark, monkeypatch):
     """Deep chain under the wikidata-style meta-rule: closure injection and
     the plain loop produce the identical fixpoint (confluence), both match
     the Datalog oracle, and the accelerated driver loop quiesces in 2
@@ -255,6 +291,7 @@ def test_transitive_doubling_differential_deep_chain(spark):
     facts = [(f"n{i:03d}", "p", f"n{i + 1:03d}") for i in range(depth)]
     facts += [("p", "~", "Trans")]
     edges = _df(spark, facts)
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)  # pins the loop
     fast = run_fixpoint(edges, [META_TRANS], transitive_doubling=True)
     slow = run_fixpoint(edges, [META_TRANS], transitive_doubling=False)
     got = _edge_set(fast.edges)
@@ -267,7 +304,7 @@ def test_transitive_doubling_differential_deep_chain(spark):
     assert verify_fixpoint(fast, [META_TRANS])
 
 
-def test_transitive_membership_discovered_mid_fixpoint(spark):
+def test_transitive_membership_discovered_mid_fixpoint(spark, monkeypatch):
     """The transitive-predicate SET is data and can grow during the run
     (e.g. wikidata.zph's transitive-inverse rule): a membership fact
     deduced in round 1 must trigger closure injection for its predicate."""
@@ -276,6 +313,7 @@ def test_transitive_membership_discovered_mid_fixpoint(spark):
     facts = [(f"m{i:02d}", "p", f"m{i + 1:02d}") for i in range(depth)]
     facts += [("p", "mark", "yes")]
     edges = _df(spark, facts)
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)  # pins the loop
     fast = run_fixpoint(edges, [META_TRANS, mark], transitive_doubling=True)
     slow = run_fixpoint(edges, [META_TRANS, mark], transitive_doubling=False)
     got = _edge_set(fast.edges)
@@ -288,47 +326,20 @@ def test_transitive_membership_discovered_mid_fixpoint(spark):
     assert ("m00", "p", f"m{depth:02d}") in got
 
 
-def test_transitive_const_shape_differential(spark):
+def test_transitive_const_shape_differential(spark, monkeypatch):
     part_of = R(
         "po-trans", [P("?a", "part", "?b"), P("?b", "part", "?c")], P("?a", "part", "?c")
     )
     facts = [("w", "part", "x"), ("x", "part", "y"), ("y", "part", "z"),
              ("q", "other", "w")]
     edges = _df(spark, facts)
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)  # pins the loop
     fast = run_fixpoint(edges, [part_of], transitive_doubling=True)
     slow = run_fixpoint(edges, [part_of], transitive_doubling=False)
     got = _edge_set(fast.edges)
     assert got == _edge_set(slow.edges)
     assert ("w", "part", "z") in got
     assert verify_fixpoint(fast, [part_of])
-
-
-def test_bucketed_base_differential_and_catalog_hygiene(spark, monkeypatch):
-    """The bucketed-base anti-join split ((cand \\ base) \\ deltas, base read
-    from a bucketed+sorted table so its side never re-exchanges) must be
-    invisible semantically: identical fixpoint output vs the plain
-    union-anti-join path, and no zelph_fix_base_* table may survive in the
-    session catalog (the files live in the per-run scratch dir, which is
-    deleted — a leaked catalog entry would poison later saveAsTable calls)."""
-    facts = sorted(
-        {(f"Q{i}", "P31", f"Q{100 + i % 7}") for i in range(40)}
-        | {(f"Q{100 + i}", "P279", f"Q{100 + i + 1}") for i in range(6)}
-        | {("P279", "~", "Trans")}
-    )
-    edges = _df(spark, facts)
-    monkeypatch.setenv("ZELPH_FIXPOINT_BUCKET_BASE", "1")
-    on = run_fixpoint(edges, Rz.wikidata_rules())
-    monkeypatch.setenv("ZELPH_FIXPOINT_BUCKET_BASE", "0")
-    off = run_fixpoint(edges, Rz.wikidata_rules())
-    got = _edge_set(on.edges)
-    assert got == _edge_set(off.edges)
-    assert got == oracle.stratified_fixpoint(set(facts), Rz.wikidata_rules())
-    assert on.iterations == off.iterations
-    leftovers = [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("zelph_fix_base_")
-    ]
-    assert leftovers == []
 
 
 def test_inherit_factoring_differential(spark, monkeypatch):
@@ -346,6 +357,7 @@ def test_inherit_factoring_differential(spark, monkeypatch):
            ("A", "P461", "N5"), ("A", "P31", "KA")}
     )
     edges = _df(spark, facts)
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)  # pins the loop
     monkeypatch.setenv("ZELPH_INHERIT_DOUBLING", "1")
     fast = run_fixpoint(edges, Rz.wikidata_rules())
     monkeypatch.setenv("ZELPH_INHERIT_DOUBLING", "0")
@@ -379,6 +391,7 @@ def test_fuse_shape_mode_differential(spark, monkeypatch):
            ("C", "P1696", "D"), ("C", "P31", "KC")}
     )
     edges = _df(spark, facts)
+    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)  # pins the loop
     monkeypatch.setenv("ZELPH_FUSE_ALL_SHAPES", "0")
     per_shape = run_fixpoint(edges, Rz.wikidata_rules())
     monkeypatch.setenv("ZELPH_FUSE_ALL_SHAPES", "1")
@@ -386,3 +399,15 @@ def test_fuse_shape_mode_differential(spark, monkeypatch):
     got = _edge_set(per_shape.edges)
     assert got == _edge_set(all_shapes.edges)
     assert got == oracle.stratified_fixpoint(set(facts), Rz.wikidata_rules())
+
+
+def test_round_cap_raises(spark, monkeypatch):
+    """A fixpoint still deducing at ``max_iter`` rounds raises instead of
+    returning a partial fact set — on the distributed loop, and through the
+    kernel, whose round budget is the same ``max_iter``."""
+    facts = [(f"n{i:02d}", "p", f"n{i + 1:02d}") for i in range(32)]
+    facts += [("p", "~", "Trans")]
+    edges = _df(spark, facts)
+    for plan in _plans(monkeypatch):
+        with pytest.raises(RuntimeError, match=r"run_fixpoint.*max_iter=2\b"):
+            run_fixpoint(edges, [META_TRANS], max_iter=2)

@@ -1,7 +1,7 @@
 """Local replica of the driver's correctness gate: run each queries() entry
 on Spark at sf0.01, run oracle_sql() in DuckDB on the same parquet views,
 compare rowcount + sorted column names + order-insensitive values."""
-import sys, math
+import sys, math, os
 import pathlib; sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 import duckdb
 import __spark_entry__ as E
@@ -9,8 +9,20 @@ from zelph_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = sys.argv[2:] or None
-spark = get_spark(master="local[16]", shuffle_partitions=16,
-                  extra_conf={"spark.driver.memory": "16g"})
+
+
+def host_session_size():
+    """local[<cores>] from SPARK_GRAFT_CPUS (else the usable cores) and a
+    pre-touched driver heap of a quarter of host RAM, 1-16 GiB — sized like
+    perfbench's session so the gate runs on small hosts too."""
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"local[{cores}]", f"{max(1024, min(16384, total_mb // 4))}m"
+
+
+master, heap = host_session_size()
+print(f"session: {master}, driver heap {heap}")
+spark = get_spark(master=master, extra_conf={"spark.driver.memory": heap})
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

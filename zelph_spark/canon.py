@@ -100,9 +100,11 @@ def connected_components(
 ) -> DataFrame:
     """pairs(a, b) -> (node, comp) where comp = min node id reachable.
 
-    Works for any orderable id type (long or string). Converges in
-    O(log n) rounds via min-propagation + pointer jumping; edge sets under
-    LOCAL_CC_BOUND take the single-task kernel (_local_components) instead.
+    Works for any orderable id type (long or string). Edge sets under
+    LOCAL_CC_BOUND take the single-task kernel (_local_components); larger
+    ones run min-propagation + pointer jumping, which can need a round per
+    few hops on long paths, so labels still changing after ``max_iter``
+    rounds raise RuntimeError instead of returning partial components.
     """
     if pairs.isEmpty():
         t = pairs.schema["a"].dataType.simpleString()
@@ -171,6 +173,11 @@ def connected_components(
         )
         if not obs.get["changed"]:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds"
+        )
     return labels
 
 

@@ -59,16 +59,19 @@ def _count_and_nulls(df: DataFrame) -> tuple:
     return row.n, row.nn or 0
 
 
-def _run_one_task(df: DataFrame, compute, schema) -> tuple:
+def _run_one_task(df: DataFrame, compute, schema, observe: tuple = ()) -> tuple:
     """repartition(1) + mapInPandas + eager checkpoint for the kernel
     fast paths. repartition, not coalesce: coalesce(1) would collapse the
     UPSTREAM scan/filter to one task too. Returns (result, None) or, when
     the kernel raised an overflow mark, (None, mark) so the caller can
-    fall back to its distributed plan. Cluster note: a deterministic
-    overflow failure is retried spark.task.maxFailures times before
-    surfacing (local mode fails fast); the caps are sized so overflow is
-    the rare path."""
+    fall back to its distributed plan. ``observe``: ``(Observation,
+    *exprs)`` over the kernel output, collected by the checkpoint job
+    itself. Cluster note: a deterministic overflow failure is retried
+    spark.task.maxFailures times before surfacing (local mode fails
+    fast); the caps are sized so overflow is the rare path."""
     out = df.repartition(1).mapInPandas(compute, schema=schema)
+    if observe:
+        out = out.observe(*observe)
     try:
         return out.localCheckpoint(), None
     except Exception as e:
@@ -248,6 +251,9 @@ def transitive_closure(
     are log(max diameter over groups). Used by the fixpoint's transitive-
     predicate acceleration.
 
+    A distributed loop still finding pairs after ``max_iter`` rounds
+    raises RuntimeError instead of returning a partial closure.
+
     ``local_ok=False`` skips the single-task fast path (a caller whose own
     kernel already overflowed passes this so the doomed kernel is not
     re-run); ``sized=(n_rows, n_null_rows)`` hands over an already-known
@@ -383,7 +389,9 @@ def transitive_closure(
         delta = new
         if reach_rows[0] is not None and reach_rows[0] <= 2_000_000:
             reach_rows[0] += new.count()
-    return reach_df()
+    raise RuntimeError(
+        f"transitive_closure: no quiescence within max_iter={max_iter} rounds"
+    )
 
 
 def closure_with_start(pairs: DataFrame, prepared: bool = False) -> DataFrame:
@@ -600,7 +608,10 @@ def transitive_targets(
 ) -> DataFrame:
     """Forward closure from a seed set (zelph.cpp:267-281): returns
     (start, target) rows. ``start`` is a one-column DF named 'node'.
-    ``prepared``: see :func:`transitive_closure`."""
+    ``prepared``: see :func:`transitive_closure`. The distributed frontier
+    loop takes one hop per round; a frontier still growing after
+    ``max_iter`` hops raises RuntimeError instead of returning a truncated
+    target set."""
     base = (
         pairs if prepared else pairs.select(*PAIR).distinct().localCheckpoint()
     )
@@ -657,6 +668,10 @@ def transitive_targets(
             break
         pieces.append(new)
         frontier = new
+    else:
+        raise RuntimeError(
+            f"transitive_targets: no quiescence within max_iter={max_iter} hops"
+        )
     visited = visited_df()
     if include_start:
         seeds = start.select(

@@ -1,8 +1,25 @@
 """Semi-naive, stratified fixpoint driver (SURVEY.md §2.4 R1/R8/R9, §4 O5/O6).
 
-Catalyst has no fixpoint operator, so the loop lives in the Python driver —
-the distributed analog of ``Reasoning::run`` (``reasoning.cpp:57-211``) and
-``run_fixpoint_seminaive`` (``reasoning_seminaive.cpp:92-445``):
+Catalyst has no fixpoint operator. :func:`run_fixpoint` has two plans for
+the analog of ``Reasoning::run`` (``reasoning.cpp:57-211``) and
+``run_fixpoint_seminaive`` (``reasoning_seminaive.cpp:92-445``), with one
+schedule and one result contract:
+
+- **single-task kernel** (:mod:`.kernel`): the whole stratified evaluation
+  in one ``mapInPandas`` task. Admitted when the deduplicated base has at
+  most ``closure.LOCAL_EDGE_BOUND`` rows, no null key, one id type (string
+  or long) across ``subj``/``pred``/``obj``, rule constants of that type and
+  no fresh-variable rule. Otherwise the log's first entry is
+  ``{"stratum": "kernel-declined", "reason": ...}`` with reason ``bound``,
+  ``null-keys``, ``id-types``, ``constant-types``, ``fresh-variables`` or
+  ``overflow`` (an intermediate past ``closure.LOCAL_PAIR_CAP`` rows or
+  more than ``max_iter`` rounds inside the task), and the distributed loop
+  runs. The kernel sets no session conf and writes no scratch files.
+- **distributed loop** in the Python driver, one round at a time. It sets
+  session-wide SQL confs for its lifetime (see :func:`run_fixpoint`), so
+  two fixpoints must not run concurrently on one session.
+
+The schedule both plans follow:
 
 - iteration 1 is a classic pass over all positive rules; afterwards only the
   delta participates: for each rule and each positive condition position j,
@@ -17,12 +34,15 @@ the distributed analog of ``Reasoning::run`` (``reasoning.cpp:57-211``) and
 - NAF rules form stratum 2 (``reasoning.cpp:102-161``): they run only at
   positive quiescence; anything they deduce re-opens the positive stratum,
   and the alternation repeats until the NAF round is silent;
-- every round localCheckpoints the full and delta frames — fixpoint lineage
-  otherwise grows linearly and re-executes from scratch (§7 hard part 1);
 - contradiction rules (consequence ``!``) never feed the delta: they are
   evaluated once at the end against the saturated graph and returned as a
   (rule_id, bindings) DataFrame — the distributed form of zelph's counted
   ``contradiction_error`` records (``reasoning_deduce.cpp:131-133``).
+
+The distributed loop additionally lands every round's delta as parquet —
+fixpoint lineage otherwise grows linearly and re-executes from scratch (§7
+hard part 1) — and factors chain-inheritance rules out of the rounds
+(:func:`split_inherit`).
 
 :func:`verify_fixpoint` ports the reference's semi-naive safety net
 (``reasoning_seminaive.cpp:386-407``): one classic pass over the result must
@@ -31,6 +51,7 @@ deduce nothing new.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -38,6 +59,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..rules import Rule, is_var
 from .compiler import compile_rule_body, project_consequence
+from . import kernel
 from .fused import fire_contradictions_fused, fire_fused, fuse_contradiction_rules, fuse_rules
 
 EDGE_COLS = ["subj", "pred", "obj"]
@@ -416,6 +438,18 @@ def run_fixpoint(
     """Saturate ``edges`` (string or long ids — any equality-joinable type)
     under ``rules``; then evaluate ``contradiction_rules`` once.
 
+    Plan choice (module docstring): the deduplicated base is checkpointed
+    once, its row and null-key counts riding that job; a base the
+    single-task kernel admits is saturated in one task, anything else — or
+    a kernel overflow — runs the distributed loop. ``semi_naive``, ``fuse``
+    and ``transitive_doubling`` shape only the distributed loop. The
+    distributed loop sets ``spark.sql.adaptive.*`` confs on the session for
+    its duration and restores them afterwards, so concurrent fixpoints on one
+    session are unsupported; the kernel path sets none. ``iterations`` is
+    the distributed loop's round count, or the kernel's last productive
+    round (0 when nothing is deduced). More than ``max_iter`` rounds without
+    quiescence raises RuntimeError rather than returning a partial set.
+
     ``transitive_doubling``: factor transitivity rules (const and meta
     shapes, :func:`split_transitive`) out of the per-round machinery and
     saturate each transitive predicate's slice with the adaptive
@@ -439,6 +473,45 @@ def run_fixpoint(
     of a deduction (reasoning_deduce.cpp:289-292)."""
     import shutil
     import tempfile
+
+    from pyspark.sql import Observation
+
+    # the deduplicated base; its sizing (rows, null-keyed rows) rides the
+    # checkpoint job as Observation metrics, so admission costs no job
+    sizing = Observation()
+    base = (
+        edges.select(*EDGE_COLS)
+        .dropDuplicates(EDGE_COLS)
+        .observe(
+            sizing,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(
+                (F.col("subj").isNull() | F.col("pred").isNull()
+                 | F.col("obj").isNull()).cast("long")
+            ).alias("nulls"),
+        )
+        .localCheckpoint()
+    )
+    rows, nulls = sizing.get["rows"], sizing.get["nulls"] or 0
+    t0 = time.time()
+    run, reason = kernel.saturate(base, rows, nulls, rules, max_iter)
+    if run is not None:
+        log = [{"iter": run.iterations, "stratum": "positive", "plan": "kernel",
+                "new": run.n_deduced, "rows": rows,
+                "sec": round(time.time() - t0, 2)}]
+        return FixpointResult(
+            edges=run.edges,
+            deduced=run.deduced,
+            contradictions=_sweep_contradictions(
+                run.edges, rules, contradiction_rules, wrong_facts, run.preds,
+                log,
+            ),
+            iterations=run.iterations,
+            n_deduced=run.n_deduced,
+            log=log,
+        )
+    declined = {"stratum": "kernel-declined", "reason": reason, "rows": rows,
+                "sec": round(time.time() - t0, 2)}
 
     scratch = tempfile.mkdtemp(prefix="zelph_fixpoint_")
     spark = edges.sparkSession
@@ -480,8 +553,8 @@ def run_fixpoint(
     for k, v in loop_conf.items():
         spark.conf.set(k, v)
     try:
-        return _run_fixpoint_inner(
-            edges, rules, contradiction_rules, semi_naive, max_iter, scratch,
+        result = _run_fixpoint_inner(
+            base, rules, contradiction_rules, semi_naive, max_iter, scratch,
             fuse, wrong_facts, transitive_doubling,
         )
     finally:
@@ -493,46 +566,40 @@ def run_fixpoint(
         # every returned DataFrame is rooted at localCheckpointed RDDs
         # (full/base), never at the scratch parquet files
         shutil.rmtree(scratch, ignore_errors=True)
+    result.log.insert(0, declined)
+    return result
+
+
+def _sweep_contradictions(
+    full, rules, contradiction_rules, wrong_facts, present, log
+) -> DataFrame:
+    """The contradiction sweep over the saturated ``full`` (both plans):
+    explicit contradiction rules plus, with ``wrong_facts``, re-deduced
+    known-wrong facts. Appends its driver-side time to ``log``."""
+    t0 = time.time()
+    contradictions = evaluate_contradictions(
+        full, contradiction_rules or [], present_preds=present
+    )
+    if wrong_facts is not None:
+        # plan construction is lazy but deduced_wrong_contradictions runs
+        # one EAGER job (the wrong-predicate collect) — timed so the e2e
+        # decomposition can see the sweep's driver-side share
+        contradictions = contradictions.unionByName(
+            deduced_wrong_contradictions(
+                full, rules, wrong_facts, present_preds=present
+            )
+        )
+    log.append({"stratum": "contra-plan", "sec": round(time.time() - t0, 2)})
+    return contradictions
 
 
 def _run_fixpoint_inner(
-    edges, rules, contradiction_rules, semi_naive, max_iter, scratch, fuse,
+    base, rules, contradiction_rules, semi_naive, max_iter, scratch, fuse,
     wrong_facts=None, transitive_doubling=True,
 ) -> FixpointResult:
-    spark = edges.sparkSession
-    base = edges.select(*EDGE_COLS).dropDuplicates(EDGE_COLS).localCheckpoint()
-    # Bucketed copy of base for the per-round anti-join (opt-in,
-    # ZELPH_FIXPOINT_BUCKET_BASE=1): cand \ full splits into
-    # (cand \ base) \ deltas, and a base written ONCE as a bucketed+sorted
-    # table joins with NO exchange and NO sort on its side every round.
-    # MEASURED A TIE at 200k docs — default OFF (A/B, same host, probes
-    # 3.9-4.3 s both legs, 56 rounds, identical outputs: fixpoint 399.7 s
-    # plain vs 407.5 s bucketed): at sandbox scale base is broadcast-small,
-    # so the anti-join never shuffled the full extent to begin with and the
-    # bucketed write+scan is pure overhead. The win exists only where base
-    # exceeds the broadcast threshold AND the shuffle is network-bound —
-    # i.e. the multi-executor shape — so the knob is for spark-submit runs,
-    # not the local bench. Differential-pinned either way
-    # (tests/test_reasoning.py::test_bucketed_base_differential...).
     import os as _os
-    import uuid as _uuid
 
-    base_b = None
-    base_tbl = None
-    if _os.environ.get("ZELPH_FIXPOINT_BUCKET_BASE", "0") == "1":
-        base_tbl = f"zelph_fix_base_{_uuid.uuid4().hex[:10]}"
-        # bucket count == shuffle partitions so the candidate side's
-        # dropDuplicates exchange already matches the bucketed layout and
-        # the anti-join inserts NO further exchange on either side
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        (
-            base.write.mode("overwrite")
-            .option("path", f"{scratch}/base_bucketed")
-            .bucketBy(n_buckets, *EDGE_COLS)
-            .sortBy(*EDGE_COLS)
-            .saveAsTable(base_tbl)
-        )
-        base_b = spark.table(base_tbl)
+    spark = base.sparkSession
     positive = [r for r in rules if not r.negated]
     naf_rules = [r for r in rules if r.negated]
     tsplit = split_transitive(positive) if transitive_doubling else None
@@ -671,11 +738,10 @@ def _run_fixpoint_inner(
         delta_paths.append(path)
 
     def anti_targets(extra=None):
-        r"""The current known-fact set as separate anti-join targets:
-        bucketed base (exchange- and sort-free side) + accumulated deltas
-        (the only part that still shuffles) [+ the sibling delta when the
-        closure lands second]. (A \ (B u C)) == (A \ B) \ C."""
-        t = [base if base_b is None else base_b]
+        r"""The current known-fact set as separate anti-join targets: base
+        + accumulated deltas [+ the sibling delta when the closure lands
+        second]. (A \ (B u C)) == (A \ B) \ C."""
+        t = [base]
         if delta_paths:
             t.append(spark.read.parquet(*delta_paths))
         if extra is not None:
@@ -687,8 +753,7 @@ def _run_fixpoint_inner(
         returns (delta_df, path, n_rows, pred_set) with exactly ONE job:
         row count and delta-predicate set ride the write job as Observation
         metrics instead of a second scan. ``targets``: list of DataFrames
-        whose union is the known-fact set (kept separate so the bucketed
-        base side never re-shuffles)."""
+        whose union is the known-fact set."""
         from pyspark.sql import Observation
 
         if cand is None:
@@ -787,10 +852,6 @@ def _run_fixpoint_inner(
     delta, dpaths, n_delta, delta_preds, rule_preds = materialize_round(
         cand0, clo0, anti_targets(), "delta_0"
     )
-    from pyspark.storagelevel import StorageLevel
-
-    cache_full = _os.environ.get("ZELPH_FIXPOINT_CACHE_FULL", "0") == "1"
-    prev_cached_full = None
     plan_sec = None
     while iterations < max_iter:
         iterations += 1
@@ -964,19 +1025,6 @@ def _run_fixpoint_inner(
         delta_paths.extend(dpaths)
         maybe_compact()
         full = full_df()
-        if cache_full:
-            # MEASURED SLOWER at 200k docs — default OFF (A/B, same host,
-            # 56 rounds: cached 572.6 s vs uncached 462.6, slower in BOTH
-            # the 100k-fact mid rounds (8.5 vs 6.8 s) and the <5k tail
-            # (11.6 vs 9.9 s)): building the columnar CachedBatches every
-            # round costs more than the ~7 parquet re-decodes it saves —
-            # the scan is cheap, the per-round cache WRITE is not. Kept as
-            # an opt-in (ZELPH_FIXPOINT_CACHE_FULL=1) for cluster shapes
-            # where executor-local decode is the bottleneck.
-            full = full.persist(StorageLevel.MEMORY_AND_DISK)
-            if prev_cached_full is not None:
-                prev_cached_full.unpersist(blocking=False)
-            prev_cached_full = full
         present |= delta_preds
         for sp in inherit_specs:
             if sp.p in delta_preds and sp not in just_injected:
@@ -1013,37 +1061,25 @@ def _run_fixpoint_inner(
         delta, dpaths, n_delta, delta_preds, rule_preds = materialize_round(
             cand, clo, anti_targets(), f"delta_{iterations}"
         )
+    else:
+        # the cap was reached with a delta still pending: the facts so far
+        # are not the fixpoint, so there is no result to return
+        raise RuntimeError(
+            f"run_fixpoint: no quiescence within max_iter={max_iter} rounds"
+        )
 
     # detach the result from the scratch dir (deleted by the caller): one
     # final materialization of the deltas instead of one per round; base is
     # already checkpointed and is not re-copied
     _t0 = _time.time()
-    if prev_cached_full is not None:
-        prev_cached_full.unpersist(blocking=False)
     if delta_paths:
         full = base.unionByName(
             spark.read.parquet(*delta_paths).localCheckpoint()
         )
     log.append({"stratum": "detach", "sec": round(_time.time() - _t0, 2)})
-    if base_tbl is not None:
-        # the bucketed base's files live under scratch (deleted by the
-        # caller); drop the catalog entry so sessions reused across many
-        # fixpoint calls don't accumulate dead external tables
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-    _t0 = _time.time()
-    contradictions = evaluate_contradictions(
-        full, contradiction_rules or [], present_preds=present
+    contradictions = _sweep_contradictions(
+        full, rules, contradiction_rules, wrong_facts, present, log
     )
-    if wrong_facts is not None:
-        # plan construction is lazy but deduced_wrong_contradictions runs
-        # one EAGER job (the wrong-predicate collect) — timed so the e2e
-        # decomposition can see the sweep's driver-side share
-        contradictions = contradictions.unionByName(
-            deduced_wrong_contradictions(
-                full, rules, wrong_facts, present_preds=present
-            )
-        )
-    log.append({"stratum": "contra-plan", "sec": round(_time.time() - _t0, 2)})
     deduced = full.join(base, on=EDGE_COLS, how="left_anti")
     return FixpointResult(
         edges=full,
